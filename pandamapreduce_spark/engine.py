@@ -230,8 +230,9 @@ class Engine:
 
         Scale note: ``binaryFile`` materializes a whole file per row —
         fine for the ≤ few-hundred-MB files the tera tools produce per
-        partition; a DataSource-v2 splitting reader is the upgrade
-        path for multi-GB single files.
+        partition; for multi-GB single files use
+        ``read_tera_records_split``, which cuts files into
+        record-aligned ranges, one task each.
         """
         files = self.spark.read.format("binaryFile").load(path)
         n = (F.length("content") / tera.RECORD_LEN).cast("long")

@@ -1,6 +1,8 @@
 """Sources & sinks beyond parquet: csv/json/orc/xml/text readers+writers
 (schema-explicit — no inference in production paths), partitioned
-writes, and the fixed-width tera record reader (in ``engine.py``).
+writes, and the splittable fixed-width tera record reader
+(``sources.tera_source``, reached through
+``Engine.read_tera_records_split``).
 
 The reference's IO surface is chunked byte buffers in, raw
 file/stdout out (SURVEY §1.1 O1-O3, O17); this module is the

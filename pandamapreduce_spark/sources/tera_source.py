@@ -96,6 +96,7 @@ class TeraReader(DataSourceReader):
 
     def read(self, split: TeraSplit) -> Iterator["pa.RecordBatch"]:
         import numpy as np
+        import pyarrow as pa
 
         if not split.length:
             return
@@ -110,8 +111,6 @@ class TeraReader(DataSourceReader):
                 recs = np.frombuffer(chunk, np.uint8)[: n * RECORD_LEN].reshape(n, RECORD_LEN)
                 kflat = np.ascontiguousarray(recs[:, :KEY_LEN]).reshape(-1)
                 vflat = np.ascontiguousarray(recs[:, KEY_LEN:]).reshape(-1)
-                import pyarrow as pa
-
                 yield pa.record_batch(
                     [_binary_array(kflat, n, KEY_LEN), _binary_array(vflat, n, RECORD_LEN - KEY_LEN)],
                     names=["key", "value"],

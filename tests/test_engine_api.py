@@ -3,8 +3,12 @@ porting surface (SURVEY §7.1)."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 
+import numpy as np
+import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
 
 from pandamapreduce_spark.engine import Dataset, Engine, MapReduceJob
@@ -99,6 +103,80 @@ def test_tera_file_roundtrip(spark):
         a = sorted((bytes(r.key), bytes(r.value)) for r in gen.collect())
         b = sorted((bytes(r.key), bytes(r.value)) for r in back.collect())
         assert a == b
+
+
+def _tera_file_bytes(first: int, n: int) -> bytes:
+    """The record file teragen + the sink should produce for records
+    [first, first + n): key‖value per record, in record order."""
+    kflat, vflat = tera._gen_block(first, n)
+    return np.hstack([kflat.reshape(n, tera.KEY_LEN), vflat.reshape(n, tera.VALUE_LEN)]).tobytes()
+
+
+def test_tera_sink_byte_exact(spark):
+    """Each part file is exactly its partition's records in order —
+    a sorted-set comparison cannot see reordering inside a file."""
+    with tempfile.TemporaryDirectory() as d:
+        assert tera.write_tera_files(tera.teragen(spark, 1_000, 3), d) == 3
+        assert sorted(os.listdir(d)) == [f"part-0000{i}.tera" for i in range(3)]
+        # 1000 = 3 × 333 + 1: partition 0 takes the extra record
+        for i, (first, n) in enumerate([(0, 334), (334, 333), (667, 333)]):
+            with open(os.path.join(d, f"part-0000{i}.tera"), "rb") as f:
+                assert f.read() == _tera_file_bytes(first, n)
+
+    with tempfile.TemporaryDirectory() as d:
+        assert tera.write_tera_files(tera.teragen(spark, 2, 4), d) == 2  # 2 empty partitions: no file
+        assert sorted(os.listdir(d)) == ["part-00000.tera", "part-00001.tera"]
+
+    widths = spark.createDataFrame([(b"a", b""), (b"", b"bc"), (b"def", b"ghij")], "key binary, value binary")
+    with tempfile.TemporaryDirectory() as d:
+        assert tera.write_tera_files(widths.coalesce(1), d) == 1
+        with open(os.path.join(d, "part-00000.tera"), "rb") as f:
+            assert f.read() == b"abcdefghij"
+
+    nulls = spark.createDataFrame([(b"k", b"v"), (b"k", None)], "key binary, value binary")
+    with tempfile.TemporaryDirectory() as d, pytest.raises(Exception, match="null key or value"):
+        tera.write_tera_files(nulls, d)
+
+
+def test_tera_sink_removes_stale_part_files(spark):
+    """A narrower rewrite into the same directory must not leave the
+    earlier write's higher-numbered part files to be read back."""
+    e = Engine(spark)
+    second = tera.teragen(spark, 600, num_partitions=2)
+    with tempfile.TemporaryDirectory() as d:
+        with open(os.path.join(d, "notes.txt"), "w") as f:
+            f.write("kept")
+        assert tera.write_tera_files(tera.teragen(spark, 1_000, num_partitions=4), d) == 4
+        assert tera.write_tera_files(second, d) == 2
+        assert sorted(os.listdir(d)) == ["notes.txt", "part-00000.tera", "part-00001.tera"]
+        back = e.read_tera_records_split(d).collect()
+        assert sorted((bytes(r.key), bytes(r.value)) for r in back) == sorted(
+            (bytes(r.key), bytes(r.value)) for r in second.collect()
+        )
+
+
+def test_tera_sink_large_var_types(spark):
+    """With arrow.useLargeVarTypes the sink receives large_binary
+    columns (int64 offsets) and must write the same bytes."""
+    conf = "spark.sql.execution.arrow.useLargeVarTypes"
+    before = spark.conf.get(conf, None)
+    spark.conf.set(conf, "true")
+    try:
+        gen = tera.teragen(spark, 1_000, 3)
+        seen = gen.mapInArrow(
+            lambda it: (pa.record_batch([pa.array([str(b.schema.field(0).type)])], names=["t"]) for b in it),
+            "t string",
+        ).collect()
+        assert {r.t for r in seen} == {"large_binary"}
+        with tempfile.TemporaryDirectory() as d:
+            assert tera.write_tera_files(gen, d) == 3
+            with open(os.path.join(d, "part-00001.tera"), "rb") as f:
+                assert f.read() == _tera_file_bytes(334, 333)
+    finally:
+        if before is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, before)
 
 
 def test_engine_sql_surface(spark):
